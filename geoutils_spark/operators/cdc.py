@@ -51,10 +51,6 @@ _GEAR = np.array(
 _POW2 = (1 << np.arange(WINDOW, dtype=np.int64))  # 2^j for j=0..W-1
 
 
-def gear_value(byte: int) -> int:
-    return int(_GEAR[byte])
-
-
 # ---------------------------------------------------------------------------
 # numpy kernel (the scale path)
 # ---------------------------------------------------------------------------
@@ -168,9 +164,3 @@ def rolling_hash_from_codes_sql(codes_col: str) -> str:
         range({WINDOW}, len({codes_col}) + 1), t ->
           list_sum(list_transform(range(0, {WINDOW}), j ->
             {codes_col}[t - j] * CAST(2 ** j AS BIGINT))) % {_MOD})"""
-
-
-def rolling_hash_sql(text: str) -> str:
-    """One-expression twin (tests); oracle queries should stage
-    ``gear_codes_sql`` in a CTE and use ``rolling_hash_from_codes_sql``."""
-    return rolling_hash_from_codes_sql(f"({gear_codes_sql(text)})")

@@ -130,11 +130,6 @@ def shoelace_fp_col(ring: Column) -> Column:
 # SQL-text backend (DuckDB oracle twin — identical arithmetic)
 # ---------------------------------------------------------------------------
 
-def ring_struct_sql(rx: str, ry: str) -> str:
-    return (f"list_transform(range(1, len({rx}) + 1), "
-            f"ri -> {{'x': {rx}[ri], 'y': {ry}[ri]}})")
-
-
 def _clip_half_plane_sql(r: str, axis: str, cmp: str, bound: str) -> str:
     other = "y" if axis == "x" else "x"
     p1, p2 = f"{r}[k]", f"{r}[k+1]"

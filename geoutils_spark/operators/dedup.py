@@ -375,10 +375,6 @@ def dot_col(a: Column, b: Column) -> Column:
                        F.lit(0.0), lambda acc, x: acc + x)
 
 
-def cosine_col(a: Column, b: Column) -> Column:
-    return dot_col(a, b) / (F.sqrt(dot_col(a, a)) * F.sqrt(dot_col(b, b)))
-
-
 def embedding_near_dup_pairs(
     vectors: DataFrame,
     id_col: str = "vec_id",

@@ -176,16 +176,6 @@ def plan_from_json(s: str) -> SplitNode:
     return SplitNode.from_dict(json.loads(s))
 
 
-def repartition_balanced(points: DataFrame, plan: SplitNode,
-                         lon: str = "lon", lat: str = "lat",
-                         out: str = "leaf") -> DataFrame:
-    """Attach the leaf key and repartition so each leaf is one task's output
-    — the execute pass (osmsplitwriter.cpp:78-139) without locks."""
-    n_leaves = len(plan.leaves())
-    df = points.withColumn(out, leaf_name_col(plan, lon, lat))
-    return df.repartition(n_leaves, F.col(out))
-
-
 def repartition_by_range(df: DataFrame, cols: list[str], n: int) -> DataFrame:
     """Built-in alternative: RangePartitioner's internal reservoir sampling
     replaces the explicit stats pass (SURVEY.md §4)."""

@@ -116,7 +116,7 @@ def rasterize_polygons(polygons: DataFrame, level: int,
     side of the tiler (osmsplit routes ways onto cells; this burns
     them). Plan: bbox -> covering cells (bounded explode, loud
     ``max_cells`` guard), cell centers decoded row-locally, the exact
-    ray-cast refine (same Arrow kernel as spatial_join) keeps
+    ray-cast refine (the same Catalyst fold as spatial_join) keeps
     center-inside cells, then ONE partial-aggregating exchange keyed by
     cell id. Polygon payloads never shuffle — the explode carries
     (way_id, ring arrays) only as long as the refine needs them, and
@@ -131,7 +131,7 @@ def rasterize_polygons(polygons: DataFrame, level: int,
         F.explode("cells").alias("cell_id"))
     clon, clat = C.cell_center_col(F.col("cell_id"), level)
     p = p.withColumn("__clon", clon).withColumn("__clat", clat)
-    p = p.filter(SJ.point_in_polygon_udf(
+    p = p.filter(SJ.point_in_polygon_col(
         F.col("__clon"), F.col("__clat"), F.col("__rx"), F.col("__ry")))
     return p.groupBy("cell_id").agg(
         F.count(F.lit(1)).alias("n_polys"),

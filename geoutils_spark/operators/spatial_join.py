@@ -11,8 +11,9 @@ vectorized ray-cast refines the candidates (analog of the reference's exact
 Clipper/S2 containment, /root/reference/osm2assimp/utils.cpp:95-154 and
 viewfilter.cpp:32-43).
 
-No per-row Python: the only Python on the hot path is one Arrow-batched
-numpy ray-cast kernel; everything else is whole-stage-codegen'd columns.
+No Python in the point-in-polygon refine: the ray-cast is a Catalyst
+``aggregate`` fold over ring edges, evaluated in the join itself; the numpy
+kernels below are its parity reference.
 """
 
 from __future__ import annotations
@@ -76,7 +77,7 @@ def _encode_lambda(x: Column, y: Column, level: int) -> Column:
 
 
 # ---------------------------------------------------------------------------
-# Exact ray-cast point-in-polygon (vectorized numpy, Arrow-batched)
+# Exact ray-cast point-in-polygon: numpy reference + Catalyst predicate
 # ---------------------------------------------------------------------------
 
 def _ring_crossings_np(px: np.ndarray, py: np.ndarray, xs_list, ys_list) -> np.ndarray:
@@ -103,7 +104,7 @@ def _ring_crossings_np(px: np.ndarray, py: np.ndarray, xs_list, ys_list) -> np.n
     y1, y2 = ys_flat[idx], ys_flat[idx + 1]
     pxe, pye = px[row_of_edge], py[row_of_edge]
     cond = (y1 > pye) != (y2 > pye)
-    with np.errstate(divide="ignore", invalid="ignore"):
+    with np.errstate(divide="ignore", invalid="ignore", over="ignore"):
         xint = x1 + (pye - y1) / (y2 - y1) * (x2 - x1)
     crossing = cond & (pxe < xint)
     return np.bincount(row_of_edge[crossing], minlength=n)
@@ -143,33 +144,53 @@ def ray_cast_rings_np(px: np.ndarray, py: np.ndarray,
     return (counts.astype(np.int64) % 2) == 1
 
 
-@F.pandas_udf(T.BooleanType())
-def point_in_polygon_udf(lon: pd.Series, lat: pd.Series,
-                         ring_x: pd.Series, ring_y: pd.Series) -> pd.Series:
-    return pd.Series(
-        ray_cast_np(lon.to_numpy(), lat.to_numpy(),
-                    ring_x.to_numpy(), ring_y.to_numpy())
-    )
+def _ring_fold(xs: Column, ys: Column, acc: Column) -> Column:
+    """Fold one ring's edges into ``acc = struct(n, x, y)``, counting in
+    ``n`` the crossings of the ray from ``(x, y)`` with the half-open rule
+    and float expression order of ``_ring_crossings_np`` (bit-identical).
+    The point rides in the accumulator, so the lambda captures only the
+    ring arrays (a point-capturing lambda has been seen pushed below the
+    polygon side's ``Generate``; ``test_join_plan_has_no_refine_python_eval``
+    pins the predicate above it)."""
+    size = F.size(xs)
+    # sequence(0, -1) counts downward: rings of < 2 points have no edges
+    edges = F.when(size > 1, F.sequence(F.lit(0), size - 2)) \
+        .otherwise(F.array().cast("array<int>"))
+
+    def step(a: Column, i: Column) -> Column:
+        px, py = a["x"], a["y"]
+        x1, x2, y1, y2 = xs[i], xs[i + 1], ys[i], ys[i + 1]
+        xint = x1 + (py - y1) / (y2 - y1) * (x2 - x1)
+        # an edge with a NaN y has a NaN xint: numpy compares it false,
+        # Spark orders NaN above every double. The CASE keeps the division
+        # off horizontal edges (ANSI divide-by-zero).
+        crosses = F.when((y1 > py) != (y2 > py),
+                         (px < xint) & ~F.isnan(xint)).otherwise(F.lit(False))
+        return F.struct((a["n"] + F.when(crosses, 1).otherwise(0)).alias("n"),
+                        px.alias("x"), py.alias("y"))
+
+    return F.aggregate(edges, acc, step)
 
 
-@F.pandas_udf(T.BooleanType())
-def point_in_rings_udf(lon: pd.Series, lat: pd.Series,
-                       rings_x: pd.Series, rings_y: pd.Series) -> pd.Series:
-    return pd.Series(
-        ray_cast_rings_np(lon.to_numpy(), lat.to_numpy(),
-                          rings_x.to_numpy(), rings_y.to_numpy())
-    )
+def _point_acc(lon: Column, lat: Column) -> Column:
+    return F.struct(F.lit(0).alias("n"), lon.cast("double").alias("x"),
+                    lat.cast("double").alias("y"))
 
 
-def _poly_refine(polygons: DataFrame):
-    """(select-exprs, refine-udf) for a polygon side: multi-ring when the
-    schema carries ``rings: array<struct<lon:array,lat:array>>``, single
-    outer ring otherwise."""
-    if "rings" in polygons.columns:
-        return ([F.col("rings.lon").alias("__rx"),
-                 F.col("rings.lat").alias("__ry")], point_in_rings_udf)
-    return ([F.col("ring.lon").alias("__rx"),
-             F.col("ring.lat").alias("__ry")], point_in_polygon_udf)
+def point_in_polygon_col(lon: Column, lat: Column,
+                         ring_x: Column, ring_y: Column) -> Column:
+    """Even-odd point-in-ring predicate; row-for-row ``ray_cast_np``."""
+    return _ring_fold(ring_x, ring_y, _point_acc(lon, lat))["n"] % 2 == 1
+
+
+def point_in_rings_col(lon: Column, lat: Column,
+                       rings_x: Column, rings_y: Column) -> Column:
+    """Even-odd multi-ring predicate, crossings summed over every ring
+    (holes); row-for-row ``ray_cast_rings_np``."""
+    rings = F.arrays_zip(rings_x.alias("x"), rings_y.alias("y"))
+    acc = F.aggregate(rings, _point_acc(lon, lat),
+                      lambda a, r: _ring_fold(r["x"], r["y"], a))
+    return acc["n"] % 2 == 1
 
 
 # ---------------------------------------------------------------------------
@@ -194,24 +215,8 @@ def spatial_join(points: DataFrame, polygons: DataFrame, level: int,
       (/root/reference/osmsplit/mapsplit.h:65-88).
     """
     pts = C.with_cell(points, lon, lat, level, "cell_id")
-    ring_cols, refine_udf = _poly_refine(polygons)
-    polys = with_covering_cells(polygons, level)
-    polys = polys.select(
-        "way_id", F.explode("cells").alias("cell_id"), *ring_cols,
-    )
-    if n_salt > 1:
-        pts = pts.withColumn("__salt", F.pmod(F.xxhash64(*point_cols), F.lit(n_salt)))
-        polys = polys.withColumn("__salt", F.explode(F.sequence(F.lit(0), F.lit(n_salt - 1))))
-        keys = ["cell_id", "__salt"]
-    else:
-        keys = ["cell_id"]
-    right = F.broadcast(polys) if broadcast_polygons else polys
-    joined = pts.join(right, on=keys, how="inner")
-    if exact:
-        joined = joined.filter(
-            refine_udf(F.col(lon), F.col(lat), F.col("__rx"), F.col("__ry"))
-        )
-    return joined.select(*point_cols, "way_id", "cell_id")
+    return _join_prepared(pts, polygons, level, lon, lat, point_cols,
+                          broadcast_polygons, exact, n_salt)
 
 
 def spatial_join_adaptive(points: DataFrame, polygons: DataFrame,
@@ -253,17 +258,30 @@ def spatial_join_adaptive(points: DataFrame, polygons: DataFrame,
 
 def _join_prepared(pts: DataFrame, polygons: DataFrame, level: int,
                    lon: str, lat: str, point_cols: tuple,
-                   broadcast_polygons: bool, exact: bool) -> DataFrame:
-    ring_cols, refine_udf = _poly_refine(polygons)
-    polys = with_covering_cells(polygons, level)
-    polys = polys.select(
-        "way_id", F.explode("cells").alias("cell_id"), *ring_cols,
+                   broadcast_polygons: bool, exact: bool,
+                   n_salt: int = 0, refine=None) -> DataFrame:
+    """Cell equi-join of celled points against ``polygons``' covering
+    cells, refined by ``refine(lon, lat, ring_x, ring_y)`` on ``ring``;
+    by default the even-odd PIP, multi-ring when the schema carries
+    ``rings: array<struct<lon:array,lat:array>>``."""
+    ring = "ring"
+    if refine is None:
+        ring, refine = (("rings", point_in_rings_col) if "rings" in polygons.columns
+                        else ("ring", point_in_polygon_col))
+    polys = with_covering_cells(polygons, level).select(
+        "way_id", F.explode("cells").alias("cell_id"),
+        F.col(f"{ring}.lon").alias("__rx"), F.col(f"{ring}.lat").alias("__ry"),
     )
+    keys = ["cell_id"]
+    if n_salt > 1:
+        pts = pts.withColumn("__salt", F.pmod(F.xxhash64(*point_cols), F.lit(n_salt)))
+        polys = polys.withColumn("__salt", F.explode(F.sequence(F.lit(0), F.lit(n_salt - 1))))
+        keys.append("__salt")
     right = F.broadcast(polys) if broadcast_polygons else polys
-    joined = pts.join(right, on="cell_id", how="inner")
+    joined = pts.join(right, on=keys, how="inner")
     if exact:
         joined = joined.filter(
-            refine_udf(F.col(lon), F.col(lat), F.col("__rx"), F.col("__ry"))
+            refine(F.col(lon), F.col(lat), F.col("__rx"), F.col("__ry"))
         )
     return joined.select(*point_cols, "way_id", "cell_id")
 
@@ -281,20 +299,12 @@ def polyline_join(points: DataFrame, lines: DataFrame, level: int,
     the same predicate without materializing the ribbon).
     """
     pts = C.with_cell(points, lon, lat, level, "cell_id")
-    lns = with_covering_cells(_pad_bbox(lines, tolerance_deg), level)
-    lns = lns.select(
-        "way_id",
-        F.explode("cells").alias("cell_id"),
-        F.col("ring.lon").alias("__rx"),
-        F.col("ring.lat").alias("__ry"),
-    )
-    right = F.broadcast(lns) if broadcast_lines else lns
-    joined = pts.join(right, on="cell_id", how="inner")
-    joined = joined.filter(
-        point_to_polyline_dist_udf(F.col(lon), F.col(lat), F.col("__rx"), F.col("__ry"))
-        <= F.lit(tolerance_deg)
-    )
-    return joined.select(*point_cols, "way_id", "cell_id")
+
+    def near(x: Column, y: Column, rx: Column, ry: Column) -> Column:
+        return point_to_polyline_dist_udf(x, y, rx, ry) <= F.lit(tolerance_deg)
+
+    return _join_prepared(pts, _pad_bbox(lines, tolerance_deg), level, lon, lat,
+                          point_cols, broadcast_lines, True, refine=near)
 
 
 def _pad_bbox(df: DataFrame, pad: float) -> DataFrame:

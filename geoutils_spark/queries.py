@@ -4522,10 +4522,11 @@ def geo_rasterize(spark, sf_dir):
     fixture buildings onto the level-17 cell grid by center sampling —
     the inverse of geo_raster_regions' polygonize. Engine path: bbox ->
     bounded covering-cells explode -> row-local center decode -> exact
-    Arrow ray-cast keeps center-inside cells -> one partial-aggregating
-    exchange on cell id. For the axis-aligned fixtures the half-open
-    ray-cast equals the bbox predicate, so the tile-enumerating oracle
-    (integer tile ranges, bit-math cell encode) is hash-exact."""
+    Catalyst ray-cast fold keeps center-inside cells -> one
+    partial-aggregating exchange on cell id. For the axis-aligned
+    fixtures the half-open ray-cast equals the bbox predicate, so the
+    tile-enumerating oracle (integer tile ranges, bit-math cell encode)
+    is hash-exact."""
     polys = fixtures.polygons_df(spark).filter(F.col("kind") == "building")
     from geoutils_spark.operators.raster import rasterize_polygons
 
@@ -7278,8 +7279,10 @@ def geo_st_cube(spark, sf_dir):
     base = C.with_cell(pts, "lon", "lat", _STC_LEVEL, "cell_id").select(
         "user_id", "cell_id",
         F.expr(f"ts_us div {_STC_HOUR_US}").alias("hr"))
-    base.createOrReplaceTempView("stc_base")
-    return spark.sql(_STC_AGG_SQL)
+    # {stc_base} binds to a per-call temp view that spark.sql drops once
+    # the query is analyzed: nothing leaks into the session catalog
+    return spark.sql(_STC_AGG_SQL.replace("FROM stc_base", "FROM {stc_base}"),
+                     stc_base=base)
 
 
 @register("rel_anomaly_hours", f"""

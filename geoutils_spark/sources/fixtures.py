@@ -132,8 +132,9 @@ def polygon_grid(extents=LONDON_EXTENTS, nx: int = 6, ny: int = 3):
 
     Buildings: `space`x`space` squares every `2*space`
     (create_test_osm_file.py:151-183, reading sw from extents[0] — the
-    reference code's extents[2] there is an off-by-index slip its own tests
-    never hit). Highways: east-west rows + north-south columns through road
+    reference code's extents[2] there is an off-by-index slip its pinned S2
+    cell names depend on; tests/conftest.py shifts the extents to match).
+    Highways: east-west rows + north-south columns through road
     nodes offset +1.5*space (ibid. :166-205).
 
     The grid is parameterized by integer counts (nx, ny) rather than a float

@@ -351,3 +351,21 @@ def test_st_cube_marginals_consistent(spark):
     for c, r in bycell.items():
         kids = [x["n_users"] for x in fine if x["cell_id"] == c]
         assert max(kids) <= r["n_users"] <= sum(kids)
+
+
+def test_st_cube_leaves_temp_views_unchanged(spark):
+    """Building geo_st_cube registers no session-global temp view (two
+    builds in one session cannot race on a shared name), and the built
+    DataFrame still runs after its per-call view is dropped."""
+    from geoutils_spark.queries import SPARK_QUERIES
+
+    def temp_views():
+        return sorted(t.name for t in spark.catalog.listTables()
+                      if t.isTemporary)
+
+    before = temp_views()
+    a = SPARK_QUERIES["geo_st_cube"](spark, "/root/testdata/sf0.001")
+    b = SPARK_QUERIES["geo_st_cube"](spark, "/root/testdata/sf0.001")
+    assert temp_views() == before
+    assert sorted(a.collect()) == sorted(b.collect())
+    assert temp_views() == before

@@ -1,30 +1,16 @@
-"""OSM XML ingestion (sources/osm.py) validated on a file produced by the
-REFERENCE's own test generator (/root/reference/create_test_osm_file.py,
-run as a black box), then driven through the J1 nodes-ways resolution
-pipeline — the analog of /root/reference/test.py:85-100."""
-
-import subprocess
-import sys
+"""OSM XML ingestion (sources/osm.py) validated on the reference
+generator's test file (the ``osm_file`` fixture in conftest.py rebuilds it
+from ``fixtures.polygon_grid``), then driven through the J1 nodes-ways
+resolution pipeline — the analog of /root/reference/test.py:85-100."""
 
 import pytest
 from pyspark.sql import functions as F
 
 from geoutils_spark.sources import osm
 
-# reference test extents/space (/root/reference/test.py:39-52):
+# the reference generator's test file (conftest.osm_file):
 # 14 rows x 23 cols -> 322 buildings, 28 highways, 5 nodes per grid square
-EXTENTS = "-0.085415,51.522852,-0.076432,51.528441"
 N_BUILDINGS, N_HIGHWAYS, N_NODES = 322, 28, 1610
-
-
-@pytest.fixture(scope="module")
-def osm_file(tmp_path_factory):
-    path = str(tmp_path_factory.mktemp("osm") / "ref_test.osm")
-    subprocess.run(
-        [sys.executable, "/root/reference/create_test_osm_file.py", path,
-         "--extents=" + EXTENTS, "-s", "0.0002"],
-        check=True, capture_output=True)
-    return path
 
 
 def test_read_empty_paths(spark):

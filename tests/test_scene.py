@@ -1,9 +1,7 @@
 """Full-scene parity with the reference's own golden: osm2assimp exports
 ``numBuildings + numHighways + 1`` meshes (/root/reference/test.py:85-100)
-from a file produced by the reference's generator, run as a black box."""
-
-import subprocess
-import sys
+from the reference generator's test file (the ``osm_file`` fixture in
+conftest.py)."""
 
 import numpy as np
 import pytest
@@ -12,18 +10,7 @@ from pyspark.sql import functions as F
 from geoutils_spark.operators.ribbon import ribbon_mesh_np, ribbon_polylines
 from geoutils_spark.sources import osm
 
-EXTENTS = "-0.085415,51.522852,-0.076432,51.528441"
 N_BUILDINGS, N_HIGHWAYS = 322, 28
-
-
-@pytest.fixture(scope="module")
-def osm_file(tmp_path_factory):
-    path = str(tmp_path_factory.mktemp("scene") / "ref_test.osm")
-    subprocess.run(
-        [sys.executable, "/root/reference/create_test_osm_file.py", path,
-         "--extents=" + EXTENTS, "-s", "0.0002"],
-        check=True, capture_output=True)
-    return path
 
 
 def test_ribbon_mesh_reference_shape():

@@ -235,3 +235,140 @@ def test_spatial_join_with_holes(spark):
     }))
     got = spatial_join(pts, donuts, level=15).toPandas()
     assert set(got.page_id) == {1}  # hole point excluded, band point kept
+
+
+# values that make boundary cases common: shared vertices, horizontal and
+# vertical edges, py equal to a vertex y, signed zeros, NaN
+_PIP_VALUES = [0.0, -0.0, 0.5, 1.0, 1.5, 2.0, -1.0, 0.25, float("nan")]
+
+
+def _pip_value():
+    from hypothesis import strategies as st
+
+    return st.one_of(st.sampled_from(_PIP_VALUES),
+                     st.floats(min_value=-3.0, max_value=3.0))
+
+
+def _pip_ring():
+    """A ring of 0..7 vertices, closed or not, so rings of < 2 points and
+    unclosed paths appear alongside ordinary closed rings."""
+    from hypothesis import strategies as st
+
+    pts = st.lists(st.tuples(_pip_value(), _pip_value()), max_size=6)
+    return st.tuples(pts, st.booleans()).map(
+        lambda t: ([p[0] for p in t[0]] + [p[0] for p in t[0][:1] if t[1]],
+                   [p[1] for p in t[0]] + [p[1] for p in t[0][:1] if t[1]]))
+
+
+def _pip_point(rings):
+    """Points drawn from the value pool or ON a ring vertex / edge midpoint,
+    so vertex and edge hits are common."""
+    from hypothesis import strategies as st
+
+    verts = [(x, y) for xs, ys in rings for x, y in zip(xs, ys)]
+    mids = [((xs[i] + xs[i + 1]) / 2, (ys[i] + ys[i + 1]) / 2)
+            for xs, ys in rings for i in range(len(xs) - 1)]
+    choices = [st.tuples(_pip_value(), _pip_value())]
+    if verts:
+        choices.append(st.sampled_from(verts))
+        # py equal to a vertex y, px anywhere
+        choices.append(st.tuples(_pip_value(),
+                                 st.sampled_from([y for _, y in verts])))
+    if mids:
+        choices.append(st.sampled_from(mids))
+    return st.one_of(*choices)
+
+
+def _pip_case(n_rings):
+    from hypothesis import strategies as st
+
+    return n_rings.flatmap(
+        lambda k: st.lists(_pip_ring(), min_size=k, max_size=k).flatmap(
+            lambda rings: st.tuples(_pip_point(rings), st.just(rings))))
+
+
+def test_point_in_polygon_col_matches_numpy(spark):
+    """The Catalyst fold equals ``ray_cast_np`` row by row, boundary and NaN
+    cases included; rings of < 2 points have no edges (never inside)."""
+    from hypothesis import given, settings
+    from hypothesis import strategies as st
+
+    from geoutils_spark.operators.spatial_join import point_in_polygon_col
+
+    @settings(max_examples=12, deadline=None)
+    @given(st.lists(_pip_case(st.just(1)), min_size=1, max_size=200))
+    def check(cases):
+        rows = [(i, px, py, rs[0][0], rs[0][1])
+                for i, ((px, py), rs) in enumerate(cases)]
+        df = spark.createDataFrame(
+            rows, "i int, px double, py double, "
+                  "rx array<double>, ry array<double>")
+        got = df.select("i", point_in_polygon_col(
+            F.col("px"), F.col("py"), F.col("rx"), F.col("ry")).alias("in"))
+        got = {r.i: r["in"] for r in got.collect()}
+        edged = [r for r in rows if len(r[3]) >= 2]
+        exp = dict.fromkeys((r[0] for r in rows), False)
+        if edged:
+            inside = ray_cast_np(np.array([r[1] for r in edged]),
+                                 np.array([r[2] for r in edged]),
+                                 [np.array(r[3]) for r in edged],
+                                 [np.array(r[4]) for r in edged])
+            exp.update(zip((r[0] for r in edged), inside.tolist()))
+        assert got == exp
+
+    check()
+
+
+def test_point_in_rings_col_matches_numpy(spark):
+    """Multi-ring fold equals ``ray_cast_rings_np`` row by row: crossings
+    summed over every ring (holes), rings of < 2 points contribute none."""
+    from hypothesis import given, settings
+    from hypothesis import strategies as st
+
+    from geoutils_spark.operators.spatial_join import (point_in_rings_col,
+                                                       ray_cast_rings_np)
+
+    @settings(max_examples=12, deadline=None)
+    @given(st.lists(_pip_case(st.integers(0, 3)), min_size=1, max_size=200))
+    def check(cases):
+        rows = [(i, px, py, [r[0] for r in rs], [r[1] for r in rs])
+                for i, ((px, py), rs) in enumerate(cases)]
+        df = spark.createDataFrame(
+            rows, "i int, px double, py double, "
+                  "rx array<array<double>>, ry array<array<double>>")
+        got = df.select("i", point_in_rings_col(
+            F.col("px"), F.col("py"), F.col("rx"), F.col("ry")).alias("in"))
+        got = sorted((r.i, r["in"]) for r in got.collect())
+        keep = [[k for k, xs in enumerate(r[3]) if len(xs) >= 2] for r in rows]
+        exp = ray_cast_rings_np(
+            np.array([r[1] for r in rows]), np.array([r[2] for r in rows]),
+            [[np.array(r[3][k]) for k in ks] for r, ks in zip(rows, keep)],
+            [[np.array(r[4][k]) for k in ks] for r, ks in zip(rows, keep)])
+        assert got == list(enumerate(exp.tolist()))
+
+    check()
+
+
+def test_join_plan_has_no_refine_python_eval(spark, data):
+    """The refine is a Catalyst predicate: the join's physical plan keeps
+    exactly one Python eval node, the text extraction, and the predicate
+    runs on the join output (it is not pushed through the polygon side's
+    Generate, where the point columns do not exist)."""
+    pages, polys = data
+    buildings = polys.filter("kind = 'building'")
+    j = spatial_join(pages, buildings, level=15,
+                     point_cols=("page_id", "text"))
+    rows = j.collect()
+    assert {(r.page_id, r.way_id) for r in rows} == {
+        (r.page_id, r.way_id)
+        for r in spatial_join(pages, buildings, level=15).collect()}
+    plan = j._jdf.queryExecution().executedPlan().toString()
+    plan = plan.split("== Initial Plan ==")[0]  # AQE prints both plans
+    lines = plan.splitlines()
+    evals = [ln for ln in lines if "EvalPython" in ln]
+    assert len(evals) == 1 and "extract_text" in evals[0], plan
+    k = next(i for i, ln in enumerate(lines) if "BroadcastExchange" in ln)
+    depth = lines[k].index("+-")
+    build = [ln for ln in lines[k + 1:]
+             if len(ln) - len(ln.lstrip(" :|")) > depth]
+    assert not any("aggregate(" in ln for ln in build), plan
